@@ -58,8 +58,11 @@ class TransformChain:
 
     def _audit(self, kind: str, step_name: str, code: str) -> None:
         if self.audit is not None:
-            pipeline, _, layer = self.name.partition(".")
-            self.audit.save(pipeline, layer or "chain", step_name, kind, code)
+            # "<pipeline>.<layer>": pipeline names may themselves hold dots.
+            pipeline, dot, layer = self.name.rpartition(".")
+            if not dot:
+                pipeline, layer = self.name, "chain"
+            self.audit.save(pipeline, layer, step_name, kind, code)
 
     # -- authoring -----------------------------------------------------------
 

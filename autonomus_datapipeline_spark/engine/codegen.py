@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from typing import Callable, Protocol
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -94,12 +94,6 @@ def schema_context(df: DataFrame, sample_n: int = 5) -> dict:
             r.asDict(recursive=True) for r in df.limit(sample_n).collect()
         ],
     }
-
-
-class CodegenProvider(Protocol):
-    def __call__(
-        self, prompt: str, schema_ctx: dict, history: list[dict]
-    ) -> str: ...
 
 
 class FakeProvider:

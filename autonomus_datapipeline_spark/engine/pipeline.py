@@ -22,10 +22,11 @@ from __future__ import annotations
 import datetime as _dt
 import re
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from autonomus_datapipeline_spark.catalog import Catalog
 from autonomus_datapipeline_spark.engine.chain import StepMetric, TransformChain
@@ -100,19 +101,19 @@ class Pipeline:
         orchestrator retries never double-ingest.
         """
         t0 = time.time()
+        versions = self.catalog.versions("bronze", self.name)
+        metas: dict[int, dict] = {}  # each version's _meta.json, read at most once
         if batch_id is not None:
             # Check against the UNION of batch ids across ALL bronze versions:
             # schema drift opens a new version directory, and a retried batch
             # recorded under an earlier version must still be skipped (else
             # read_bronze_history() double-counts it).
-            for v in self.catalog.versions("bronze", self.name):
+            for v in versions:
                 try:
-                    seen = self.catalog.read_meta("bronze", self.name, v).get(
-                        "ingested_batch_ids", []
-                    )
+                    metas[v] = self.catalog.read_meta("bronze", self.name, v)
                 except FileNotFoundError:
                     continue
-                if batch_id in seen:
+                if batch_id in metas[v].get("ingested_batch_ids", []):
                     return LayerResult(
                         "bronze", v, self.catalog.data_path("bronze", self.name, v),
                         0, round(time.time() - t0, 3),
@@ -131,10 +132,11 @@ class Pipeline:
         # instead a drifted batch opens a NEW bronze version directory (the
         # reference's "re-detection bumps the version" semantics,
         # routers/schemas.py:126-173). read_bronze_history() unions versions.
-        version = self.catalog.latest_version("bronze", self.name) or 1
-        existing = self.catalog.versions("bronze", self.name)
-        if existing:
-            prev = self.catalog.schema_of("bronze", self.name, version)
+        version = versions[-1] if versions else 1
+        if versions:
+            if version not in metas:
+                metas[version] = self.catalog.read_meta("bronze", self.name, version)
+            prev = T.StructType.fromJson(metas[version]["schema"])
             incoming_names = [(f.name, f.dataType.simpleString())
                               for f in lineage.schema.fields]
             prev_names = [(f.name, f.dataType.simpleString()) for f in prev.fields]
@@ -147,14 +149,8 @@ class Pipeline:
             .parquet(path)
         )
         rows = int(obs.get["rows"])
-        prior_ids: list[str] = []
-        if version in self.catalog.versions("bronze", self.name):
-            try:
-                prior_ids = self.catalog.read_meta("bronze", self.name, version).get(
-                    "ingested_batch_ids", []
-                )
-            except FileNotFoundError:
-                prior_ids = []
+        # A drift-bumped (or first) version has no metadata yet.
+        prior_ids = metas.get(version, {}).get("ingested_batch_ids", [])
         if batch_id is not None:
             prior_ids = [*prior_ids, batch_id]
         self.catalog.write_meta(
@@ -178,8 +174,8 @@ class Pipeline:
         return out
 
     # Above this many files the per-file schema probe (one driver round-trip
-    # each) is skipped by default — at 10^5 files sequential probes dominate
-    # wall-clock while contributing only accounting detail.
+    # each) is skipped — at 10^5 files sequential probes dominate wall-clock
+    # while contributing only accounting detail.
     PROBE_FILE_LIMIT = 256
 
     def ingest_files(
@@ -188,56 +184,40 @@ class Pipeline:
         schema=None,
         schema_version: int = 1,
         ingestion_date: str | None = None,
-        per_file_accounting: bool | None = None,
     ) -> tuple[LayerResult, list[dict]]:
         """Bronze-ingest a FileSource with per-file success/skip accounting
         (reference bronze_ingestion.py:120-176: each file read individually,
         failures skipped and reported, survivors unioned).
 
-        The per-file probe only touches metadata/first-bytes (schema read),
-        then all readable files go through ONE parallel multi-path scan —
-        not a driver-side union loop.
-
-        ``per_file_accounting``: True forces the probe, False skips it; None
-        (default) auto-disables above :attr:`PROBE_FILE_LIMIT` files. With the
-        probe skipped, unreadable files surface at scan time (Spark's
+        Up to :attr:`PROBE_FILE_LIMIT` files, each file is probed through a
+        one-file copy of the source (schema resolution only — metadata or
+        first bytes) and reported ok or skipped. Above it, the probe is
+        skipped: unreadable files surface at scan time (Spark's
         ``ignoreCorruptFiles`` can be passed via source options) and the
-        report carries one summary row instead of one per file.
+        report carries one summary row instead of one per file. Either way
+        all readable files go through ONE parallel multi-path scan — not a
+        driver-side union loop.
         """
-        from pyspark.sql.utils import AnalysisException
-
         files = source.file_list()
-        if per_file_accounting is None:
-            per_file_accounting = len(files) <= self.PROBE_FILE_LIMIT
-
-        reports: list[dict] = []
-        if not per_file_accounting:
-            reports.append({
+        if len(files) > self.PROBE_FILE_LIMIT:
+            readable = files
+            reports = [{
                 "status": "batch", "n_files": len(files),
                 "note": "per-file probe skipped above PROBE_FILE_LIMIT",
-            })
-            df = source.read(self.spark, schema=schema)
-            result = self.ingest_bronze(df, schema_version, ingestion_date)
-            return result, reports
-
-        readable: list[str] = []
-        for f in files:
-            try:
-                probe = type(source)(path=f, fmt=source.fmt, options=dict(source.options))
-                _ = probe.read(self.spark, schema=schema).schema
-                readable.append(f)
-                reports.append({"file": f, "status": "ok"})
-            except (AnalysisException, Exception) as exc:  # noqa: BLE001
-                reports.append({"file": f, "status": "skipped", "error": str(exc)[:200]})
-        if not readable:
-            raise FileNotFoundError(f"no readable {source.fmt} files under {source.path}")
-        good = type(source)(
-            path=source.path, fmt=source.fmt,
-            options=dict(source.options), files=readable,
-        )
-        df = good.read(self.spark, schema=schema)
-        result = self.ingest_bronze(df, schema_version, ingestion_date)
-        return result, reports
+            }]
+        else:
+            readable, reports = [], []
+            for f in files:
+                try:
+                    _ = source.one_file(f).read(self.spark, schema=schema).schema
+                    readable.append(f)
+                    reports.append({"file": f, "status": "ok"})
+                except Exception as exc:  # noqa: BLE001
+                    reports.append({"file": f, "status": "skipped", "error": str(exc)[:200]})
+            if not readable:
+                raise FileNotFoundError(f"no readable {source.fmt} files under {source.path}")
+        df = replace(source, files=readable).read(self.spark, schema=schema)
+        return self.ingest_bronze(df, schema_version, ingestion_date), reports
 
     # -- silver / gold ----------------------------------------------------------
 

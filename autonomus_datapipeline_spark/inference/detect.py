@@ -7,13 +7,16 @@ backend/app/services/schema_detection.py — files :439-604, Kafka sample
 - sample ≤1000 rows from the FIRST file (matching the reference's
   first-file sampling), via Spark with everything read as strings so the
   voting heuristics see raw values
-- validate every other file's column signature against the first
+- validate every other file's column signature against the first, reading
+  each file once (a header read for CSV)
 - run the pure-function inference core + the 0.7/0.3 confidence formula
 - the same record-level path serves REST samples and any list[dict]
   (the Kafka-probe analog: sample N messages → infer)
 """
 
 from __future__ import annotations
+
+from dataclasses import replace
 
 from pyspark.sql import SparkSession
 
@@ -49,26 +52,26 @@ def detect_records_schema(records: list[dict]) -> InferenceResult:
 def detect_file_schema(spark: SparkSession, source: FileSource) -> InferenceResult:
     """Infer from the first file of a source + multi-file compatibility.
 
-    All columns are read as raw strings (no inferSchema) so the reference's
-    threshold-voting heuristics decide the types — including the cases Spark
-    inference gets differently (comma-separated integers, y/n booleans,
-    EU dates). Sampling one file of ≤1000 rows is O(1) at any corpus size.
+    Every file is read once, with all columns as raw strings (CSV
+    ``inferSchema=false``): the compatibility check compares column names
+    only (reference schema_detection.py:527-579), so a CSV file costs one
+    header read. The first file's read also supplies the ≤1000-row sample,
+    whose raw values the reference's threshold-voting heuristics type —
+    including the cases Spark inference gets differently (comma-separated
+    integers, y/n booleans, EU dates).
     """
     files = source.file_list()
     if not files:
         raise FileNotFoundError(f"no {source.fmt} files under {source.path}")
-    first_opts = dict(source.options)
-    if source.fmt == "csv":
-        first_opts["inferSchema"] = "false"  # raw strings for the type voting
-    first = FileSource(path=files[0], fmt=source.fmt, options=first_opts)
-    raw = first.read(spark)
-    sample_rows = [r.asDict(recursive=True) for r in raw.limit(SAMPLE_ROWS).collect()]
-    fields = infer_dataframe_schema(sample_rows, raw.columns)
+    if source.fmt == "csv":  # raw strings for the type voting
+        source = replace(source, options={**source.options, "inferSchema": "false"})
+    first = source.one_file(files[0]).read(spark)
+    sample_rows = [r.asDict(recursive=True) for r in first.limit(SAMPLE_ROWS).collect()]
+    fields = infer_dataframe_schema(sample_rows, first.columns)
 
-    file_columns: dict[str, list[str]] = {}
-    for f in files:
-        fs = FileSource(path=f, fmt=source.fmt, options=dict(source.options))
-        file_columns[f] = fs.read(spark).columns
+    file_columns = {files[0]: first.columns}
+    for f in files[1:]:
+        file_columns[f] = source.one_file(f).read(spark).columns
     compatible, incompatible = validate_multi_file(file_columns, files[0])
 
     return InferenceResult(

@@ -43,10 +43,6 @@ def norm_sq_exact(a: Column) -> Column:
     return dot_exact(a, a)
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("norm_sq", norm_sq_exact(F.col(vec_col)).cast("double"))
-
-
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,

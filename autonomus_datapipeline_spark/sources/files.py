@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import glob
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -63,6 +63,11 @@ class FileSource:
             return [self.path]
         return discover_files(self.path, self.fmt)
 
+    def one_file(self, path: str) -> FileSource:
+        """A copy of this source over the single file ``path`` — the one way
+        callers open one file of a source (same format and options)."""
+        return replace(self, path=path, files=None)
+
     def _reader(self, spark: SparkSession, schema: T.StructType | None):
         reader = spark.read
         opts = {"header": "true", **self.options} if self.fmt == "csv" else dict(self.options)
@@ -95,7 +100,7 @@ class FileSource:
             # uniform across formats (DataFrameReader.parquet() is varargs and
             # silently mishandles a list argument).
             return self._reader(spark, schema).format(self.fmt).load(files)
-        dfs = [getattr(self._reader(spark, schema), self.fmt)(f) for f in files]
+        dfs = [self.one_file(f).read(spark, schema) for f in files]
         return reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
         )

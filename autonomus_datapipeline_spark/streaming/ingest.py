@@ -6,8 +6,9 @@ tracked at :408-412, committed after write at :453-455) with checkpointed
 Structured Streaming: ``Trigger.AvailableNow`` gives the same
 "consume everything new, exactly once, then stop" batch semantics with a
 strictly stronger guarantee (atomic offset+output commit via checkpoint +
-parquet sink transactionality), and the identical code runs continuously by
-dropping the trigger.
+parquet sink transactionality). Every writer here runs with that trigger:
+each call drains what is new and stops, so an orchestrator schedules it like
+a batch job.
 
 The file-stream path is exercised in tests; the Kafka path builds the same
 plan against the kafka source (the connector jar isn't in this container, so
@@ -43,7 +44,6 @@ def stream_dir_to_bronze(
     pipeline_id: str,
     fmt: str = "json",
     schema_version: int = 1,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Incrementally ingest files landing in a directory, exactly-once.
 
@@ -58,16 +58,15 @@ def stream_dir_to_bronze(
         reader = reader.option("header", "true")
     stream = getattr(reader, fmt)(source_dir)
     lineage = with_stream_lineage(stream, pipeline_id, schema_version)
-    writer = (
+    return (
         lineage.writeStream.format("parquet")
         .option("path", bronze_path)
         .option("checkpointLocation", checkpoint_path)
         .partitionBy("_ingestion_date")
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_upsert_to_table(
@@ -76,7 +75,6 @@ def stream_upsert_to_table(
     checkpoint_path: str,
     keys: list[str],
     order_cols: list[str],
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming upsert: each micro-batch is CDC-merged (latest wins per
     key) into a parquet table via foreachBatch.
@@ -104,14 +102,13 @@ def stream_upsert_to_table(
             )
         merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(table_path)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def kafka_stream(

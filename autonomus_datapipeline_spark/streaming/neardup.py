@@ -446,7 +446,6 @@ def stream_minhash_gate(
     shingle_n: int = _MH_SHINGLE,
     n_hashes: int = _MH_HASHES,
     n_bands: int = _MH_BANDS,
-    available_now: bool = True,
     fs=None,
 ) -> StreamingQuery:
     """Checkpointed streaming wrapper for the MinHash gate — identical
@@ -470,14 +469,13 @@ def stream_minhash_gate(
             fs=fs,
         )
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(run_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_neardup_gate(
@@ -489,7 +487,6 @@ def stream_neardup_gate(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    available_now: bool = True,
     fs=None,
 ) -> StreamingQuery:
     """Checkpointed streaming wrapper: per micro-batch, gate against the
@@ -514,11 +511,10 @@ def stream_neardup_gate(
             fs=fs,
         )
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(run_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -231,6 +231,19 @@ def test_code_audit_trail(tmp_path):
     assert [f.split("_")[3] for f in files] == ["confirmed", "confirmed", "rollback"]
 
 
+def test_code_audit_trail_dotted_pipeline_name(tmp_path):
+    # Pipeline names may contain dots; the layer is the part after the LAST
+    # dot, and a chain name without a dot audits under the "chain" layer.
+    from autonomus_datapipeline_spark.engine.audit import CodeAudit
+
+    audit = CodeAudit(str(tmp_path / "audit"))
+    TransformChain("sales.daily.silver", audit=audit).add_step("s1", VALID)
+    assert len(audit.history("sales.daily", "silver")) == 1
+    assert audit.history("sales", "daily.silver") == []
+    TransformChain("adhoc", audit=audit).add_step("s1", VALID)
+    assert len(audit.history("adhoc", "chain")) == 1
+
+
 def test_preview_json_safe(spark, sf_dir):
     from autonomus_datapipeline_spark.engine.audit import preview
 
@@ -300,10 +313,9 @@ def test_bronze_idempotency_survives_schema_drift(spark, tmp_path):
     assert pipe.read_bronze_history().count() == 2
 
 
-def test_ingest_files_batch_mode_skips_per_file_probe(spark, tmp_path):
-    # Above PROBE_FILE_LIMIT (or with per_file_accounting=False) the driver
-    # must not issue one schema probe per file — one summary report row, one
-    # multi-path scan.
+def test_ingest_files_batch_mode_skips_per_file_probe(spark, tmp_path, monkeypatch):
+    # Above PROBE_FILE_LIMIT the driver must not issue one schema probe per
+    # file — one summary report row, one multi-path scan.
     from autonomus_datapipeline_spark.sources import FileSource
 
     import pyarrow as pa
@@ -314,10 +326,9 @@ def test_ingest_files_batch_mode_skips_per_file_probe(spark, tmp_path):
     tbl = pa.table({"id": [1, 2], "v": ["a", "b"]})
     for i in range(3):
         pq.write_table(tbl, str(src_dir / f"part{i}.parquet"))
+    monkeypatch.setattr(Pipeline, "PROBE_FILE_LIMIT", 2)
     pipe = Pipeline(spark, Catalog(str(tmp_path / "wh")), "bulk")
-    result, reports = pipe.ingest_files(
-        FileSource(str(src_dir), "parquet"), per_file_accounting=False
-    )
+    result, reports = pipe.ingest_files(FileSource(str(src_dir), "parquet"))
     assert result.row_count == 6
     assert len(reports) == 1 and reports[0]["status"] == "batch"
     assert reports[0]["n_files"] == 3

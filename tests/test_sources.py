@@ -198,6 +198,27 @@ def test_detect_file_schema(spark, tmp_path):
     assert 0 < res.confidence < 1
 
 
+def test_detect_file_schema_reads_each_file_once(spark, tmp_path):
+    # One header read per CSV file plus the first file's sample collect:
+    # at most N+1 Spark jobs for N files.
+    from autonomus_datapipeline_spark.inference.detect import detect_file_schema
+
+    n = 4
+    for i in range(n):
+        _write_csv(tmp_path / f"f{i}.csv", "id,amount", [f"{i},{i * 10}", "7,8"])
+    sc = spark.sparkContext
+    group = "test-detect-file-schema-jobs"
+    sc.setJobGroup(group, "detect_file_schema job count")
+    try:
+        res = detect_file_schema(spark, FileSource(str(tmp_path), "csv"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= n + 1
+    assert len(res.compatible_files) == n
+    assert res.sample_row_count == 2
+
+
 def test_detect_records_schema():
     from autonomus_datapipeline_spark.inference.detect import detect_records_schema
 
