@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from autonomus_datapipeline_spark.catalog import Catalog
 from autonomus_datapipeline_spark.engine.chain import StepMetric, TransformChain
+from autonomus_datapipeline_spark.session import fan_out
 
 # Table-name guard (reference gold_service.py:29-39)
 _NAME_RE = re.compile(r"^[a-zA-Z_][a-zA-Z0-9_.]*$")
@@ -174,8 +175,8 @@ class Pipeline:
         return out
 
     # Above this many files the per-file schema probe (one driver round-trip
-    # each) is skipped — at 10^5 files sequential probes dominate wall-clock
-    # while contributing only accounting detail.
+    # each) is skipped — at 10^5 files the probes dominate wall-clock, even
+    # overlapped, while contributing only accounting detail.
     PROBE_FILE_LIMIT = 256
 
     def ingest_files(
@@ -191,8 +192,9 @@ class Pipeline:
 
         Up to :attr:`PROBE_FILE_LIMIT` files, each file is probed through a
         one-file copy of the source (schema resolution only — metadata or
-        first bytes) and reported ok or skipped. Above it, the probe is
-        skipped: unreadable files surface at scan time (Spark's
+        first bytes) and reported ok or skipped; the probes run concurrently
+        (:func:`fan_out`) and are reported in file order. Above the limit,
+        the probe is skipped: unreadable files surface at scan time (Spark's
         ``ignoreCorruptFiles`` can be passed via source options) and the
         report carries one summary row instead of one per file. Either way
         all readable files go through ONE parallel multi-path scan — not a
@@ -206,14 +208,15 @@ class Pipeline:
                 "note": "per-file probe skipped above PROBE_FILE_LIMIT",
             }]
         else:
-            readable, reports = [], []
-            for f in files:
+            def probe(f: str) -> dict:
                 try:
                     _ = source.one_file(f).read(self.spark, schema=schema).schema
-                    readable.append(f)
-                    reports.append({"file": f, "status": "ok"})
+                    return {"file": f, "status": "ok"}
                 except Exception as exc:  # noqa: BLE001
-                    reports.append({"file": f, "status": "skipped", "error": str(exc)[:200]})
+                    return {"file": f, "status": "skipped", "error": str(exc)[:200]}
+
+            reports = fan_out(self.spark, probe, files)
+            readable = [r["file"] for r in reports if r["status"] == "ok"]
             if not readable:
                 raise FileNotFoundError(f"no readable {source.fmt} files under {source.path}")
         df = replace(source, files=readable).read(self.spark, schema=schema)

@@ -17,10 +17,13 @@ from __future__ import annotations
 
 import datetime as _dt
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from autonomus_datapipeline_spark.session import fan_out
 
 
 @dataclass
@@ -58,8 +61,11 @@ def _violation_predicate(rule: DQRule, now: _dt.datetime | None) -> Column:
         return ~c.isin(*rule.config["values"]) | c.isNull()
     if rule.kind == "freshness":
         max_age_s = rule.config["max_age_seconds"]
-        ref = F.lit((now or _dt.datetime.now(tz=_dt.timezone.utc)).replace(tzinfo=None))
-        return (F.unix_timestamp(ref) - F.unix_timestamp(c) > max_age_s) | c.isNull()
+        now = now or _dt.datetime.now(tz=_dt.timezone.utc)
+        if now.tzinfo is None:  # naive: UTC, the session time zone
+            now = now.replace(tzinfo=_dt.timezone.utc)
+        age_s = F.lit(int(now.timestamp())) - F.unix_timestamp(c)
+        return (age_s > max_age_s) | c.isNull()
     raise ValueError(f"unknown rule kind {rule.kind!r}")
 
 
@@ -71,31 +77,26 @@ def evaluate_rules(
 ) -> list[DQResult]:
     """Evaluate all rules; single aggregation job for row-level rules plus
     one groupBy per uniqueness rule and one bounded sample collect per
-    failing rule."""
+    failing rule. The follow-up jobs (samples and groupBys) depend only on
+    the aggregation's counts, so they run concurrently (:func:`fan_out`);
+    results are row rules in rule order, then uniqueness rules."""
     row_rules = [r for r in rules if r.kind != "unique"]
     uniq_rules = [r for r in rules if r.kind == "unique"]
 
     aggs = [F.count(F.lit(1)).alias("__total")]
-    preds: dict[str, Column] = {}
-    for i, r in enumerate(row_rules):
-        pred = _violation_predicate(r, now)
-        preds[r.name] = pred
+    preds = [_violation_predicate(r, now) for r in row_rules]
+    for i, pred in enumerate(preds):
         aggs.append(F.sum(F.when(pred, 1).otherwise(0)).alias(f"__viol_{i}"))
     counts = df.agg(*aggs).collect()[0] if row_rules else None
     total = int(counts["__total"]) if counts is not None else df.count()
 
-    results: list[DQResult] = []
-    for i, r in enumerate(row_rules):
-        n_fail = int(counts[f"__viol_{i}"])
-        samples = []
-        if n_fail and sample_failures:
-            samples = [
-                row.asDict(recursive=True)
-                for row in df.filter(preds[r.name]).limit(sample_failures).collect()
-            ]
-        results.append(DQResult(r, n_fail == 0, n_fail, total, samples))
+    def sample(i: int) -> list[dict]:
+        return [
+            row.asDict(recursive=True)
+            for row in df.filter(preds[i]).limit(sample_failures).collect()
+        ]
 
-    for r in uniq_rules:
+    def uniqueness(r: DQRule) -> DQResult:
         dupes = (
             df.groupBy(r.column)
             .agg(F.count(F.lit(1)).alias("n"))
@@ -103,13 +104,24 @@ def evaluate_rules(
         )
         sample_rows = dupes.limit(sample_failures).collect()
         n_dupe_keys = dupes.count()
-        results.append(
-            DQResult(
-                r,
-                n_dupe_keys == 0,
-                n_dupe_keys,
-                total,
-                [row.asDict() for row in sample_rows],
-            )
+        return DQResult(
+            r,
+            n_dupe_keys == 0,
+            n_dupe_keys,
+            total,
+            [row.asDict() for row in sample_rows],
         )
-    return results
+
+    fails = [int(counts[f"__viol_{i}"]) for i in range(len(row_rules))]
+    # The follow-up jobs (failure samples, uniqueness groupBys) are
+    # independent of each other: run them concurrently, keep rule order.
+    sampled = [i for i, n in enumerate(fails) if n and sample_failures]
+    jobs = [partial(sample, i) for i in sampled]
+    jobs += [partial(uniqueness, r) for r in uniq_rules]
+    done = fan_out(df.sparkSession, lambda job: job(), jobs)
+    samples = dict(zip(sampled, done))
+    results = [
+        DQResult(r, n == 0, n, total, samples.get(i, []))
+        for i, (r, n) in enumerate(zip(row_rules, fails))
+    ]
+    return results + done[len(sampled):]

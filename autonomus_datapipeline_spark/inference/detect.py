@@ -8,7 +8,7 @@ backend/app/services/schema_detection.py — files :439-604, Kafka sample
   first-file sampling), via Spark with everything read as strings so the
   voting heuristics see raw values
 - validate every other file's column signature against the first, reading
-  each file once (a header read for CSV)
+  each file once (a header read for CSV), all files concurrently
 - run the pure-function inference core + the 0.7/0.3 confidence formula
 - the same record-level path serves REST samples and any list[dict]
   (the Kafka-probe analog: sample N messages → infer)
@@ -26,6 +26,7 @@ from autonomus_datapipeline_spark.inference.schema_inference import (
     overall_confidence,
     validate_multi_file,
 )
+from autonomus_datapipeline_spark.session import fan_out
 from autonomus_datapipeline_spark.sources.files import FileSource
 
 SAMPLE_ROWS = 1000  # reference schema_detection.py samples ≤1000 rows
@@ -55,24 +56,31 @@ def detect_file_schema(spark: SparkSession, source: FileSource) -> InferenceResu
     Every file is read once, with all columns as raw strings (CSV
     ``inferSchema=false``): the compatibility check compares column names
     only (reference schema_detection.py:527-579), so a CSV file costs one
-    header read. The first file's read also supplies the ≤1000-row sample,
-    whose raw values the reference's threshold-voting heuristics type —
-    including the cases Spark inference gets differently (comma-separated
-    integers, y/n booleans, EU dates).
+    header read. The files are read concurrently (:func:`fan_out`), and the
+    first file's read also collects the ≤1000-row sample — so sampling
+    overlaps the other files' header reads. The reference's
+    threshold-voting heuristics type the sample's raw values — including
+    the cases Spark inference gets differently (comma-separated integers,
+    y/n booleans, EU dates).
     """
     files = source.file_list()
     if not files:
         raise FileNotFoundError(f"no {source.fmt} files under {source.path}")
     if source.fmt == "csv":  # raw strings for the type voting
         source = replace(source, options={**source.options, "inferSchema": "false"})
-    first = source.one_file(files[0]).read(spark)
-    sample_rows = [r.asDict(recursive=True) for r in first.limit(SAMPLE_ROWS).collect()]
-    fields = infer_dataframe_schema(sample_rows, first.columns)
 
-    file_columns = {files[0]: first.columns}
-    for f in files[1:]:
-        file_columns[f] = source.one_file(f).read(spark).columns
-    compatible, incompatible = validate_multi_file(file_columns, files[0])
+    def read(i: int):
+        df = source.one_file(files[i]).read(spark)
+        if i:
+            return df.columns, None
+        rows = [r.asDict(recursive=True) for r in df.limit(SAMPLE_ROWS).collect()]
+        return df.columns, (rows, infer_dataframe_schema(rows, df.columns))
+
+    results = fan_out(spark, read, range(len(files)))
+    sample_rows, fields = results[0][1]
+    compatible, incompatible = validate_multi_file(
+        {f: cols for f, (cols, _) in zip(files, results)}, files[0]
+    )
 
     return InferenceResult(
         fields=fields,

@@ -7,15 +7,23 @@ We instead keep one long-lived session with AQE enabled so partition counts are
 decided at runtime from real data sizes: on a 1000-executor cluster the same
 code path holds because AQE coalesces/splits post-shuffle partitions and
 handles skew joins without hand-tuning.
+
+:func:`fan_out` overlaps a caller's independent driver round-trips (per-file
+header reads, probes, DQ follow-up jobs) on a small thread pool that inherits
+the caller's job group.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Iterable, TypeVar
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+T = TypeVar("T")
+R = TypeVar("R")
 
 
 def get_spark(
@@ -46,7 +54,7 @@ def get_spark(
         .master(master or f"local[{cpus}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -66,3 +74,29 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def fan_out(spark: SparkSession, fn: Callable[[T], R], items: Iterable[T]) -> list[R]:
+    """``[fn(x) for x in items]`` with the calls overlapped on driver threads.
+
+    For independent Spark round-trips (one small job each) whose cost is
+    driver-side planning and job latency rather than data. Results come back
+    in input order; if any call raises, the first failing item's exception
+    (in input order) is re-raised. One item runs inline. The calls inherit
+    the caller's job group, description and session tags, so
+    ``cancelJobGroup`` and per-group job accounting cover them.
+    """
+    items = list(items)
+    if len(items) <= 1:
+        return [fn(x) for x in items]
+    try:
+        cores = len(os.sched_getaffinity(0))
+    except AttributeError:  # no sched_getaffinity on this platform
+        cores = os.cpu_count() or 1
+    wrap = inheritable_thread_target(spark)
+    # With pinned-thread mode off (PYSPARK_PIN_THREAD=false) pyspark hands
+    # back its argument instead of a wrapper: there is nothing to inherit.
+    task = fn if wrap is spark else wrap(fn)
+    with ThreadPoolExecutor(max_workers=min(len(items), cores)) as pool:
+        futures = [pool.submit(task, x) for x in items]
+    return [f.result() for f in futures]

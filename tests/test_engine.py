@@ -334,6 +334,52 @@ def test_ingest_files_batch_mode_skips_per_file_probe(spark, tmp_path, monkeypat
     assert reports[0]["n_files"] == 3
 
 
+def test_fan_out_keeps_input_order_and_raises_first_failure(spark):
+    import time
+
+    from autonomus_datapipeline_spark.session import fan_out
+
+    def slow_square(x):
+        time.sleep(0.05 * (5 - x))  # later items finish first
+        return x * x
+
+    assert fan_out(spark, slow_square, range(5)) == [0, 1, 4, 9, 16]
+    assert fan_out(spark, slow_square, [3]) == [9]
+    assert fan_out(spark, slow_square, []) == []
+
+    def fail_odd(x):
+        time.sleep(0.05 * (5 - x))  # item 3 raises before item 1
+        if x % 2:
+            raise ValueError(f"item {x}")
+        return x
+
+    with pytest.raises(ValueError, match="item 1"):
+        fan_out(spark, fail_odd, range(5))
+
+
+def test_ingest_files_probe_reports_in_file_order(spark, tmp_path):
+    # The per-file probes run concurrently; the report keeps file order and
+    # a corrupt file in the middle is skipped, not fatal.
+    from autonomus_datapipeline_spark.sources import FileSource
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src_dir = tmp_path / "src"
+    src_dir.mkdir()
+    tbl = pa.table({"id": [1, 2], "v": ["a", "b"]})
+    pq.write_table(tbl, str(src_dir / "a.parquet"))
+    (src_dir / "b.parquet").write_bytes(b"not a parquet file")
+    pq.write_table(tbl, str(src_dir / "c.parquet"))
+    pipe = Pipeline(spark, Catalog(str(tmp_path / "wh")), "ordered")
+    result, reports = pipe.ingest_files(FileSource(str(src_dir), "parquet"))
+    assert [r["status"] for r in reports] == ["ok", "skipped", "ok"]
+    assert [r["file"].rsplit("/", 1)[1] for r in reports] == [
+        "a.parquet", "b.parquet", "c.parquet"]
+    assert 0 < len(reports[1]["error"]) <= 200
+    assert result.row_count == 4
+
+
 def test_load_table_events_does_not_mutate_session_tz(spark, sf_dir):
     from autonomus_datapipeline_spark.workloads.registry import load_table
 

@@ -259,6 +259,55 @@ def test_dq_rules(spark):
     assert ok[0].passed and ok[0].failure_count == 0
 
 
+def test_dq_freshness_independent_of_now_offset(spark):
+    # One row 2 h old against a 3 h limit: fresh, whichever offset ``now``
+    # carries, and a naive ``now`` reads as UTC.
+    utc = dt.timezone.utc
+    df = spark.createDataFrame(
+        [(1, dt.datetime(2026, 8, 13, 10, 0, 0, tzinfo=utc))], ["id", "updated_at"]
+    )
+    rule = DQRule("fresh", "freshness", "updated_at", {"max_age_seconds": 3 * 3600})
+    nows = [
+        dt.datetime(2026, 8, 13, 12, 0, 0, tzinfo=utc),
+        dt.datetime(2026, 8, 13, 17, 0, 0, tzinfo=dt.timezone(dt.timedelta(hours=5))),
+        dt.datetime(2026, 8, 13, 12, 0, 0),
+    ]
+    counts = [evaluate_rules(df, [rule], now=now)[0].failure_count for now in nows]
+    assert counts == [0, 0, 0]
+    late = dt.datetime(2026, 8, 13, 19, 0, 0, tzinfo=dt.timezone(dt.timedelta(hours=5)))
+    assert evaluate_rules(df, [rule], now=late)[0].failure_count == 1
+
+
+def test_dq_failure_samples_match_sequential_collect(spark):
+    # Concurrent follow-up jobs return what a sequential filter/limit/collect
+    # returns, in rule order with uniqueness rules last.
+    df = spark.createDataFrame(
+        [(i, None if i % 3 == 0 else f"u{i}@x.com", float(i * 10), i % 4)
+         for i in range(30)],
+        ["id", "email", "value", "bucket"],
+    ).coalesce(1)
+    rules = [
+        DQRule("bucket_unique", "unique", "bucket"),
+        DQRule("email_present", "not_null", "email"),
+        DQRule("value_range", "in_range", "value", {"min": 0, "max": 100}),
+        DQRule("id_positive", "in_range", "id", {"min": 0}),
+        DQRule("id_unique", "unique", "id"),
+    ]
+    res = evaluate_rules(df, rules, sample_failures=3)
+    assert [r.rule.name for r in res] == [
+        "email_present", "value_range", "id_positive", "bucket_unique", "id_unique"]
+
+    def sequential(pred):
+        return [r.asDict(recursive=True) for r in df.filter(pred).limit(3).collect()]
+
+    assert res[0].failure_samples == sequential(F.col("email").isNull())
+    assert res[1].failure_samples == sequential(
+        (F.col("value") < 0) | (F.col("value") > 100) | F.col("value").isNull())
+    assert res[2].passed and res[2].failure_samples == []
+    assert res[3].failure_count == 4 and len(res[3].failure_samples) == 3
+    assert res[4].passed and res[4].failure_samples == []
+
+
 def test_dq_accepted_values(spark, sf_dir):
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     res = evaluate_rules(
